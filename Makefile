@@ -4,7 +4,7 @@
 SF_DIR ?= /root/testdata/sf0.001
 WAREHOUSE ?= /tmp/mfs-warehouse
 
-.PHONY: test test-sf001 test-sf01 bench pipeline quality smoke
+.PHONY: test test-sf001 test-sf01 bench bench-headline pipeline quality smoke
 
 test:
 	python -m pytest tests/ -q
@@ -12,7 +12,13 @@ test:
 test-sf01:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 
+# the two gated perfbench workloads; each prints its metrics as the last
+# stdout line (JSON)
 bench:
+	python3 perfbench/run.py --workload corpus_curation --seed 1 --seconds 6 --trace 0
+	python3 perfbench/run.py --workload medallion_build --seed 1 --seconds 6 --trace 0
+
+bench-headline:
 	python bench.py
 
 # the reference's `make run-full-pipeline` analog: raw → staging → analytics

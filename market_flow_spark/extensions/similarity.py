@@ -19,6 +19,8 @@ built-in fold is already JVM-side and avoids the Python roundtrip entirely.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,7 +76,13 @@ def cosine_topk(
 def sign_bucket(emb: Column, n_bits: int = 8) -> Column:
     """LSH blocking key: bit i set iff embedding[i] > 0. Deterministic and
     cheap; at scale replace raw leading dims with random-hyperplane
-    projections (same plan shape: a per-row expression)."""
+    projections (same plan shape: a per-row expression).
+
+    ``n_bits`` must be in [1, 31]: bit weight 2³¹ overflows the INT
+    cast under ANSI mode, which would surface only at execution, so the
+    width is checked here, at plan build, with no job."""
+    if not 1 <= n_bits <= 31:
+        raise ValueError(f"n_bits must be in [1, 31], got {n_bits}")
     out = None
     for i in range(n_bits):
         bit = F.when(emb.getItem(i) > 0, F.lit(2**i)).otherwise(F.lit(0))
@@ -817,97 +825,129 @@ def embedding_neardup_pairs(
 # 4.1e5 → 3.3 s at 10; 1.2e5 → 1.1 s at 12), ~250× costlier per row than
 # the word tier's bare index emission, hence a cap four orders below its
 # 1e10. 2e6 ≈ 15 s of verify: sf1 sits just under it (the registered
-# record's 8-bit shape stays the chooser's pick at every benched scale),
-# and emission grows ~N²/2^bits, so the first corpus past sf1 starts
-# buying hyperplanes and per-job verify cost stays roughly constant
+# record's 8-bit shape stays the router's pick at every benched scale),
+# and emission grows ~N²/2^bits, so the first corpus past sf1 escalates
+# onto the banded ladder and per-job verify cost stays roughly constant
 # thereafter — the recall trade is the documented sign-LSH contract.
 NEAR_DUP_MAX_EMISSION = 2e6
 
 
-def choose_near_dup_bits(
+def _embedding_dim(embeddings: DataFrame, emb_col: str) -> int | None:
+    """Length of the first row's embedding (a one-row job); None when the
+    frame is empty."""
+    row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
+    return None if row is None else int(row["d"])
+
+
+def _sign_sample(
     embeddings: DataFrame,
-    n_bits: int = 8,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
+    dim: int,
+    emb_col: str,
+    id_col: str,
     sample_rows: int = 4096,
-    emb_col: str = "embedding",
-    max_bits: int | None = None,
-    id_col: str = "vec_id",
     n_full: int | None = None,
-) -> int:
-    """Emission-aware block-width chooser for the sign-bucket near-dup
-    tier (the embedding mirror of ``dedup.choose_word_jaccard_strategy``'s
-    routing): estimate the block self-join's candidate emission Σ size²
-    from a bounded sample's bucket histogram — DIAGONAL-EXACT: the
-    estimate is N + (N/n_sample)²·(Σc² − n_sample), scaling only the
-    collision mass quadratically (frequency stationarity) while the
-    diagonal enters linearly — and add hyperplane bits until the
-    estimate fits ``max_emission`` or the embedding dimension runs out.
-    (Scaling the whole Σc² inflates the sample's singleton buckets into
-    n·(N/n)² phantom emission and over-escalates; measured round-11.)
+) -> tuple[list[int], int] | None:
+    """The bounded sample both near-dup choosers read: ``(patterns,
+    n_full)``, where bit k of a pattern is ``embedding[k] > 0`` for each
+    of the ``sample_rows`` lowest ``id_col`` rows. None when the frame is
+    empty.
 
-    More bits = smaller blocks = less emission but lower recall (a pair
-    straddling any added hyperplane is lost) — the standard sign-LSH
-    trade. Since round 11 the routed entry point uses this chooser only
-    as the escalation DETECTOR (does the base width's estimate fit the
-    cap?): escalated EXECUTION goes to the banded ladder, which the
-    ×4-sf1 measurement (bench_escalation.json) shows dominates
-    bit-walking on both recall and speed. A caller who wants the wider
-    single block anyway calls ``embedding_neardup_pairs(n_bits=chosen)``
-    directly — it stays DuckDB-twin-checkable at any width.
+    One bounded job: the patterns are pulled as ceil(dim/8) 8-bit chunk
+    keys per row (≤ sample_rows small ints, the same bounded-pull class
+    as the IVF/PQ codebook builds) and reassembled in Python, so every
+    block width and band layout folds from the same pull.
 
-    Cost: ONE bounded job for the histogram — the sample's buckets are
-    computed once at ``max_bits`` width and collected (≤ ``sample_rows``
-    ints, the same bounded-pull class as the IVF/PQ codebook builds);
-    bucket histograms at narrower widths are low-bit masks of that,
-    folded driver-side. The corpus count follows the word tier's
-    contract: caller-provided ``n_full``, else exact when the bounded
-    sample returns fewer rows than requested, else one ``count()``
-    (pass ``n_full`` from catalog stats to skip it at 100 TB).
+    The sample is DETERMINISTIC (TakeOrdered on ``id_col`` — no full
+    sort materialized). A bare ``limit`` is partition-order dependent in
+    Spark, so two runs on the same data could disagree near the cap and
+    flip the routed shape. When ``id_col`` is absent the first physical
+    column is the tiebreaker (still deterministic for a deterministic
+    source).
 
-    The sample is DETERMINISTIC: the ``sample_rows`` lowest ``id_col``
-    values (TakeOrdered — one bounded pass, no full sort materialized).
-    A bare ``limit`` is partition-order dependent in Spark, so two runs
-    of the same chooser on the same data could disagree near the cap and
-    flip the chosen width — nondeterministic plans and driver-parity
-    flakes. When ``id_col`` is absent the first physical column is used
-    as the tiebreaker (still deterministic for a deterministic source)."""
-    if max_emission is None:
-        return n_bits
-    dim = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim is None:
-        return n_bits
-    # bit weights are 2^i in an INT32 bucket — 30 bits is the safe ceiling
-    hi = min(max_bits if max_bits is not None else 24, int(dim["d"]), 30)
-    if hi <= n_bits:
-        return n_bits
+    The corpus count follows the word tier's contract: caller-provided
+    ``n_full``, else exact when the sample returns fewer rows than
+    requested, else one ``count()`` (a full-input action — pass
+    ``n_full`` from catalog stats to skip it at 100 TB)."""
+    chunk_keys = F.array(
+        *[
+            sign_bucket(F.slice(F.col(emb_col), j + 1, 8), min(8, dim - j))
+            for j in range(0, dim, 8)
+        ]
+    )
     order_key = id_col if id_col in embeddings.columns else embeddings.columns[0]
-    sample = (
+    rows = (
         embeddings.orderBy(order_key)
         .limit(sample_rows)
-        .select(sign_bucket(F.col(emb_col), hi).alias("s"))
+        .select(chunk_keys.alias("ck"))
+        .collect()
     )
-    sigs = [r["s"] for r in sample.collect()]
-    n_s = len(sigs)
-    if not n_s:
-        return n_bits
+    if not rows:
+        return None
+    patterns = [
+        sum(int(c) << (8 * j) for j, c in enumerate(r["ck"])) for r in rows
+    ]
     if n_full is None:
-        n_full = n_s if n_s < sample_rows else embeddings.count()
-    scale = (max(n_full, n_s) / n_s) ** 2
-    from collections import Counter
+        n_full = len(rows) if len(rows) < sample_rows else embeddings.count()
+    return patterns, n_full
 
-    bits = n_bits
-    while bits < hi:
-        counts = Counter(s & ((1 << bits) - 1) for s in sigs)
-        # diagonal-exact collision scaling (see choose_banded_layout.est):
-        # true Σc² = N + collision mass, and only the collision mass
-        # scales (N/n)² — scaling sample singletons quadratically
-        # overestimates wide-width emission by ~n·(N/n)² and walks the
-        # escalation further than the corpus warrants.
+
+def _sign_emission(
+    patterns: list[int], n_full: int, n_bands: int, band_bits: int
+) -> float:
+    """Sampled candidate emission of a sign-keyed self-join: Σ over
+    ``n_bands`` disjoint ``band_bits``-bit bands of Σ bucket-size².
+    ``n_bands=1`` is the single sign block at width ``band_bits``.
+
+    DIAGONAL-EXACT: per band the true Σ bucket² is N (every row pairs
+    with itself once) plus the COLLISION mass, and only the collision
+    mass scales as (N/n)² under frequency stationarity:
+    N + (N/n)²·(Σc² − n). Scaling the whole sample Σc², diagonal
+    included, inflates the n singleton buckets a 4096-row sample of a
+    big corpus mostly consists of into n·(N/n)² phantom emission
+    (~1.6e6 at ×4-sf1, nearly the whole 2e6 cap), which walked the
+    ladder to (1, 64) and collapsed planted-pair recall to 1/400. At
+    full sample coverage (scale = 1) the estimate is Σc² exactly."""
+    n_s = len(patterns)
+    scale = (max(n_full, n_s) / n_s) ** 2
+    mask = (1 << band_bits) - 1
+    total = 0.0
+    for b in range(n_bands):
+        counts = Counter((p >> (b * band_bits)) & mask for p in patterns)
         coll = sum(c * c for c in counts.values()) - n_s
-        if n_full + coll * scale <= max_emission:
-            break
-        bits += 1
-    return bits
+        total += n_full + coll * scale
+    return total
+
+
+def _walk_ladder(
+    patterns: list[int],
+    n_full: int,
+    dim: int,
+    n_bands: int,
+    band_bits: int,
+    max_emission: float,
+) -> tuple[int, int]:
+    """The first rung of the banded ladder — the entry (n_bands,
+    band_bits), then (B-1, dim//(B-1)), … (1, dim) — whose sampled
+    emission fits ``max_emission``.
+
+    Rung widths cap at 64: a band key is one BIGINT (``band_sign_keys``),
+    so for dim > 64 the deep rungs hash a 64-dim prefix slice per band —
+    still valid sign-LSH, just on a subset of hyperplanes. If no rung
+    fits, the deepest STRUCTURALLY valid rung is returned (an entry
+    (1, w) with w > 64 or > dim leaves no valid rung, so that case
+    clamps to the always-valid (1, min(dim, 64))), never a layout
+    ``band_sign_keys`` would reject downstream."""
+    layouts = [(n_bands, band_bits)] + [
+        (b, min(dim // b, 64)) for b in range(n_bands - 1, 0, -1)
+    ]
+    deepest_valid: tuple[int, int] | None = None
+    for bands, bits in layouts:
+        if bands * bits > dim or bits > 64:
+            continue
+        deepest_valid = (bands, bits)
+        if _sign_emission(patterns, n_full, bands, bits) <= max_emission:
+            return bands, bits
+    return deepest_valid if deepest_valid is not None else (1, min(dim, 64))
 
 
 def embedding_neardup_pairs_routed(
@@ -917,47 +957,45 @@ def embedding_neardup_pairs_routed(
     max_emission: float | None = NEAR_DUP_MAX_EMISSION,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    max_bits: int | None = None,
     n_full: int | None = None,
 ) -> DataFrame:
     """The emission-routed embedding near-dup entry point: the base
-    ``n_bits`` sign-block tier while the sampled candidate-emission
-    estimate fits ``max_emission``, the BANDED sign-LSH ladder
-    (``embedding_neardup_pairs_banded_routed``) once it doesn't — the
-    steering that stops a 100 TB caller from launching the 8-bit
-    quadratic-block job the sf1 audit flagged (20.8 s at sf1 and growing
-    ~quadratically).
+    ``n_bits`` sign block while the sampled candidate-emission estimate
+    fits ``max_emission``, the BANDED sign-LSH ladder (from (4, 16), see
+    ``choose_banded_layout``) once it doesn't — the steering that stops
+    a 100 TB caller from launching the 8-bit quadratic-block job the sf1
+    audit flagged (20.8 s at sf1 and growing ~quadratically).
 
-    Why banded, not a wider single block (round-11; the round-10 ×4-sf1
-    head-to-head, bench_escalation.json): single-block bit-walking pays
-    recall geometrically per added hyperplane — the escalated 14-bit
-    block recalled 131/400 planted cos≈0.97 pairs vs the banded ladder's
-    289/400 AT EQUAL EMISSION, and the banded shape also beat the
-    unescalated 8-bit block (216/400) at ×4.6 its speed. Bit escalation
-    is dominated on both axes, so no caller should land on it:
-    ``choose_near_dup_bits`` serves here only as the escalation DETECTOR
-    (its width estimate at ``n_bits`` is exactly the block's emission
-    check); the escalated execution shape is the banded ladder. Output
-    schema is identical on both routes ((vec1, vec2, cosine)); the
-    escalated route is certified against its parameterized DuckDB twin
-    by tests/test_steering.py."""
-    # n_full is forwarded, never computed eagerly here: each chooser
-    # counts lazily BEHIND its early exits (max_emission=None, dim at or
-    # under the base width, sample covers corpus), so a call that never
-    # needs the estimate launches zero full-input jobs. Pass n_full from
-    # catalog stats to make the escalation regime count-free too.
-    bits = choose_near_dup_bits(
-        embeddings, n_bits, max_emission, emb_col=emb_col, max_bits=max_bits,
-        id_col=id_col, n_full=n_full,
-    )
-    if bits == n_bits:
+    Why the ladder and not a wider single block: each added hyperplane
+    costs recall geometrically. On the ×4-sf1 corpus
+    (bench_escalation.json) the block escalated to 12 bits recalled
+    151/400 planted cos≈0.97 pairs, the unescalated 8-bit block 216/400
+    in 22.2 s, and the (4, 16) ladder 289/400 in 3.9 s.
+
+    Both decisions read ONE bounded sample (``_sign_sample``): the
+    block's estimate at ``n_bits`` (``_sign_emission`` with one band)
+    and, when that busts the cap, the ladder walk. Construct-time jobs:
+    none with ``max_emission=None``; the one-row dim probe alone when
+    dim <= ``n_bits`` (the block is the only shape); probe + sample
+    under the cap; probe + sample + the banded tier's dim check when
+    escalating — plus one ``count()`` when the sample is full and
+    ``n_full`` (e.g. from catalog stats) is not given. Output schema is
+    (vec1, vec2, cosine) on both routes; the escalated route is
+    certified against its parameterized DuckDB twin by
+    tests/test_steering.py."""
+    dim = None if max_emission is None else _embedding_dim(embeddings, emb_col)
+    sample = None
+    if dim is not None and dim > n_bits:
+        sample = _sign_sample(embeddings, dim, emb_col, id_col, n_full=n_full)
+    if sample is None or _sign_emission(*sample, 1, n_bits) <= max_emission:
         return embedding_neardup_pairs(
-            embeddings, threshold=threshold, n_bits=bits,
+            embeddings, threshold=threshold, n_bits=n_bits,
             id_col=id_col, emb_col=emb_col,
         )
-    return embedding_neardup_pairs_banded_routed(
-        embeddings, threshold=threshold, max_emission=max_emission,
-        id_col=id_col, emb_col=emb_col, n_full=n_full,
+    bands, bits = _walk_ladder(*sample, dim, 4, 16, max_emission)
+    return embedding_neardup_pairs_banded(
+        embeddings, threshold=threshold, n_bands=bands, band_bits=bits,
+        id_col=id_col, emb_col=emb_col,
     )
 
 
@@ -1009,36 +1047,33 @@ def embedding_neardup_pairs_banded(
     slices, then exact cosine ≥ threshold verification. The MinHash-LSH
     banding construction transplanted to hyperplane signatures.
 
-    Why it exists (measured, bench_escalation.json): the single-block
-    escalated shape holds emission bounded but pays recall
-    geometrically — at the ×4-sf1 point the 14-bit block recalled 131 of
-    400 planted cos≈0.97 pairs vs the 8-bit block's own 216/400 ceiling.
-    Banding spends the same emission budget better: expected candidate
-    emission is B·N²/2^r (4·N²/2¹⁶ = N²/2¹⁴ at the defaults — exactly
-    the single 14-bit block's), while per-pair recall is 1-(1-p^r)^B
-    instead of p^(r-log₂B) (p = 1-θ/π per hyperplane): at cos 0.97,
-    theory ~0.75 vs ~0.32 — measured at the ×4-sf1 point 289/400 planted
-    pairs vs the 14-bit block's 131/400, and even above the UNBANDED
-    8-bit block's 216/400 at 4.6× its speed (5.0 s vs 23.1 s,
-    bench_escalation.json). One extra join's worth of work
-    (candidates carry only (band, key, id) ints; the two dim-64 payloads
-    join in AFTER distinct-pair dedup, so the banded shape moves LESS
-    array payload than the single-block tier, which drags both arrays
-    through the block join).
+    Why it exists (measured on the ×4-sf1 corpus, bench_escalation.json):
+    a single block escalated to hold emission bounded pays recall
+    geometrically — the 12-bit block recalled 151 of 400 planted
+    cos≈0.97 pairs, below the 8-bit block's own 216/400. Banding spends
+    the same emission budget better: expected candidate emission is
+    B·N²/2^r (4·N²/2¹⁶ = N²/2¹⁴ at the defaults — exactly the single
+    14-bit block's), while per-pair recall is 1-(1-p^r)^B instead of
+    p^(r-log₂B) (p = 1-θ/π per hyperplane): at cos 0.97, theory ~0.75 vs
+    ~0.32. The (4, 16) layout recalled 289/400, above even the UNBANDED
+    8-bit block, at 5.6× its speed (3.9 s vs 22.2 s). One extra join's
+    worth of work (candidates carry only (band, key, id) ints; the two
+    dim-64 payloads join in AFTER distinct-pair dedup, so the banded
+    shape moves LESS array payload than the single-block tier, which
+    drags both arrays through the block join).
 
     Plan (100 TB shape): map-only explode to B (band, key, id) int rows
     per vector → band equi-join (never a cross join) → distinct id pairs
     → two hash joins back to the vectors for one exact cosine each.
     ``max_band_size`` is the degenerate-bucket guard (same contract as
     the MinHash tier's ``max_band_size``): mass-duplicate buckets belong
-    to the exact-dedup tier upstream. Scale ``band_bits`` up with corpus
-    size exactly as ``choose_near_dup_bits`` scales the single block —
-    the same sampled Σ size² estimator applies per band."""
-    dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim_row is not None and n_bands * band_bits > int(dim_row["d"]):
+    to the exact-dedup tier upstream. ``choose_banded_layout`` picks the
+    layout for a corpus size from the sampled Σ size² estimate."""
+    dim = _embedding_dim(embeddings, emb_col)
+    if dim is not None and n_bands * band_bits > dim:
         raise ValueError(
             f"n_bands*band_bits = {n_bands * band_bits} exceeds embedding "
-            f"dim {dim_row['d']}"
+            f"dim {dim}"
         )
     keys = embeddings.select(
         F.col(id_col).alias("vid"),
@@ -1094,251 +1129,66 @@ def choose_banded_layout(
     id_col: str = "vec_id",
     n_full: int | None = None,
 ) -> tuple[int, int]:
-    """Emission-aware LAYOUT chooser for the banded sign-LSH tier — the
-    banded mirror of ``choose_near_dup_bits``. Expected candidate
-    emission is B·N²/2^r, so the escalation ladder trades bands for
-    width: from the entry layout (B, r) it walks (B-1, dim//(B-1)),
-    (B-2, dim//(B-2)), … (1, dim) until the SAMPLED emission estimate —
-    Σ over bands of [N + (N/n)²·(Σ bucket-size² − n)], the
-    DIAGONAL-EXACT form of the frequency-stationarity estimator shared
-    with the single-block chooser (see ``est``'s comment for the
-    measured failure the naive form causes) — fits ``max_emission``.
-    Each rung divides
-    expected emission by ~2^(Δr)·B-ratio (e.g. dim 64: (4,16) → (3,21)
-    is ×43 less, (2,32) another ×1500), while recall decays only as one
-    band's worth of the 1-(1-p^r)^B curve per rung — far gentler than
-    the single block's per-bit p multiplier.
+    """Emission-aware LAYOUT chooser for the banded sign-LSH tier.
+    Expected candidate emission is B·N²/2^r, so the escalation ladder
+    trades bands for width: from the entry layout (B, r) it walks
+    (B-1, dim//(B-1)), (B-2, dim//(B-2)), … (1, dim) until the sampled
+    estimate (``_sign_emission``: Σ over bands of the diagonal-exact
+    N + (N/n)²·(Σ bucket-size² − n)) fits ``max_emission``. Each rung
+    divides expected emission by ~2^(Δr)·B-ratio (e.g. dim 64: (4,16) →
+    (3,21) is ×43 less, (2,32) another ×1500), while recall decays only
+    as one band's worth of the 1-(1-p^r)^B curve per rung — far gentler
+    than the single block's per-bit p multiplier.
 
-    Cost: ONE bounded job for the histogram — the sample's full sign
-    pattern is collected as ceil(dim/8) 8-bit chunk keys per row
-    (≤ sample_rows small ints, the same bounded-pull class as the other
-    choosers), and every candidate layout's band histogram is folded
-    from those chunks driver-side. The corpus count follows the word
-    tier's contract: caller-provided ``n_full``, else exact when the
-    bounded sample returns fewer rows than requested, else one
-    ``count()`` (a full-input action — pass ``n_full`` from catalog
-    stats to skip it at 100 TB). The sample is deterministic
-    (TakeOrdered on id), same contract as ``choose_near_dup_bits``.
+    Cost: a one-row dim probe plus the bounded ``_sign_sample`` job (and
+    its ``count()`` unless ``n_full`` is given or the sample covers the
+    corpus); ``max_emission=None`` launches nothing.
 
     Last resort: if NO rung fits the cap (every band layout dominated
     by degenerate buckets — near-identical sign patterns), the deepest
-    rung is returned even though its estimate exceeds the cap. Emission
-    is then driven by mass-near-duplicate buckets, which belong to the
-    exact-dedup tier UPSTREAM of any near-dup pass; pass
-    ``max_band_size`` to ``embedding_neardup_pairs_banded`` to bound
-    them explicitly (the MinHash tier's 64-cap contract)."""
+    valid rung is returned even though its estimate exceeds the cap
+    (``_walk_ladder``). Emission is then driven by mass-near-duplicate
+    buckets, which belong to the exact-dedup tier UPSTREAM of any
+    near-dup pass; pass ``max_band_size`` to
+    ``embedding_neardup_pairs_banded`` to bound them explicitly (the
+    MinHash tier's 64-cap contract)."""
     if max_emission is None:
         return n_bands, band_bits
-    dim_row = embeddings.select(F.size(F.col(emb_col)).alias("d")).first()
-    if dim_row is None:
+    dim = _embedding_dim(embeddings, emb_col)
+    if dim is None:
         return n_bands, band_bits
-    dim = int(dim_row["d"])
-    n_chunks = (dim + 7) // 8
-    chunk_keys = F.array(
-        *[
-            sum(
-                (
-                    F.when(
-                        F.col(emb_col).getItem(j * 8 + i) > 0, F.lit(2**i)
-                    ).otherwise(F.lit(0))
-                    for i in range(min(8, dim - j * 8))
-                ),
-                start=F.lit(0),
-            ).cast("int")
-            for j in range(n_chunks)
-        ]
-    )
-    order_key = id_col if id_col in embeddings.columns else embeddings.columns[0]
-    rows = (
-        embeddings.orderBy(order_key)
-        .limit(sample_rows)
-        .select(chunk_keys.alias("ck"))
-        .collect()
-    )
-    if not rows:
+    sample = _sign_sample(embeddings, dim, emb_col, id_col, sample_rows, n_full)
+    if sample is None:
         return n_bands, band_bits
-    patterns = [
-        sum(int(c) << (8 * j) for j, c in enumerate(r["ck"])) for r in rows
-    ]
-    n_s = len(patterns)
-    if n_full is None:
-        n_full = n_s if n_s < sample_rows else embeddings.count()
-    scale = (max(n_full, n_s) / n_s) ** 2
-    from collections import Counter
-
-    def est(bands: int, bits: int) -> float:
-        # Per band: true Σ bucket² = N (the diagonal — every row pairs
-        # with itself once) + the COLLISION mass, and only the collision
-        # mass scales as (N/n)² under frequency stationarity. Scaling
-        # the whole sample Σc² — diagonal included — inflates the n
-        # singleton buckets a 4096-row sample of a big corpus mostly
-        # consists of into n·(N/n)² phantom emission (~1.6e6 at ×4-sf1,
-        # nearly the whole 2e6 cap), which walked the ladder to (1, 64)
-        # and collapsed planted-pair recall to 1/400 in the round-11
-        # escalation measurement. At full sample coverage (scale = 1)
-        # this equals Σc² exactly, same as before.
-        total = 0.0
-        for b in range(bands):
-            mask = (1 << bits) - 1
-            counts = Counter((p >> (b * bits)) & mask for p in patterns)
-            coll = sum(c * c for c in counts.values()) - n_s
-            total += n_full + coll * scale
-        return total
-
-    # rung widths cap at 64: a band key is one BIGINT (band_sign_keys),
-    # so for dim > 64 the deep rungs hash a 64-dim prefix slice per band
-    # — still valid sign-LSH, just on a subset of hyperplanes
-    layouts = [(n_bands, band_bits)] + [
-        (b, min(dim // b, 64)) for b in range(n_bands - 1, 0, -1)
-    ]
-    # The last resort must still be STRUCTURALLY valid: layouts[-1]
-    # verbatim can be a rung the loop just rejected (entry n_bands=1
-    # with band_bits > 64 or > dim leaves the ladder with no generated
-    # rungs), which would crash band_sign_keys downstream instead of
-    # degrading gracefully. Track the deepest rung that passed the
-    # structural check; if none did, clamp to the always-valid (1,
-    # min(dim, 64)) single band.
-    deepest_valid: tuple[int, int] | None = None
-    for bands, bits in layouts:
-        if bands * bits > dim or bits > 64:
-            continue
-        deepest_valid = (bands, bits)
-        if est(bands, bits) <= max_emission:
-            return bands, bits
-    return deepest_valid if deepest_valid is not None else (1, min(dim, 64))
-
-
-def embedding_neardup_pairs_banded_routed(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bands: int = 4,
-    band_bits: int = 16,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_full: int | None = None,
-) -> DataFrame:
-    """``embedding_neardup_pairs_banded`` behind the emission-aware
-    layout chooser: the banded tier at whatever (n_bands, band_bits) rung
-    of the ladder fits the sampled emission cap — the shape a 100 TB
-    caller gets without thinking about N. Output semantics stay in-family
-    and DuckDB-twin-checkable at any chosen layout. ``n_full`` (e.g.
-    from catalog stats) skips the chooser's corpus count."""
-    bands, bits = choose_banded_layout(
-        embeddings, n_bands, band_bits, max_emission,
-        emb_col=emb_col, id_col=id_col, n_full=n_full,
-    )
-    return embedding_neardup_pairs_banded(
-        embeddings, threshold=threshold, n_bands=bands, band_bits=bits,
-        id_col=id_col, emb_col=emb_col,
-    )
+    return _walk_ladder(*sample, dim, n_bands, band_bits, max_emission)
 
 
 def semantic_dedup_keep(
     embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
+    pairs: DataFrame,
     id_col: str = "vec_id",
-    emb_col: str = "embedding",
     max_iter: int = 20,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) keep-list: cluster
-    the embedding near-dup pair graph into connected components and keep
-    one representative (the minimum id) per semantic cluster — the
+    a near-dup pair graph into connected components and keep one
+    representative (the minimum id) per semantic cluster — the
     embedding-tier analogue of ``dedup.dedup_keep_list``, catching
     paraphrases and re-renderings that share no surface n-grams.
 
-    Stages: sign-bucket-blocked cosine pairs (equi-join), min-label
-    propagation over the pair edge list (rounds = cluster diameter,
-    clique-ish in practice), keep = id == cluster minimum. Returns
-    (vec_id, cluster_id, keep) over ALL vectors — unpaired vectors keep
-    themselves.
+    ``pairs`` is any (vec1, vec2, …) frame over ``id_col`` values: the
+    single block (``embedding_neardup_pairs``), the banded tier, the
+    routed entry or the IVF cells. The generator's recall IS the
+    keep-list's recall — a near-dup the blocking misses is a duplicate
+    that survives dedup — which is why the routed entry escalates onto
+    the banded ladder (289/400 planted pairs vs the 8-bit block's
+    216/400 on the ×4-sf1 corpus, bench_escalation.json).
 
-    SUPERSEDED AS THE SCALE SHAPE (round 11): this single-sign-block
-    candidate generator's recall ceiling is dominated — the ×4-sf1
-    head-to-head (bench_escalation.json) measured 216/400 planted pairs
-    vs the banded generator's 289/400 at ×4.6 its speed. Prefer
-    ``semantic_dedup_keep_banded`` (explicit banded layout) or
-    ``semantic_dedup_keep_routed`` (emission-routed: base block while it
-    fits the cap, banded ladder beyond — the same steering the pair tier
-    got in round 11). This entry remains for single-block parity and
-    small corpora where the 8-bit block's emission is trivially safe."""
+    Min-label propagation over the pair edge list (rounds = cluster
+    diameter, clique-ish in practice, at most ``max_iter``); keep = id
+    == cluster minimum. Returns (id_col, cluster_id, keep) over ALL
+    vectors — unpaired vectors keep themselves."""
     from market_flow_spark.extensions.dedup import dedup_keep_list
 
-    pairs = embedding_neardup_pairs(
-        embeddings, threshold, n_bits, id_col, emb_col
-    )
-    ids = embeddings.select(F.col(id_col).alias("doc_id"))
-    keep = dedup_keep_list(
-        ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
-    )
-    return keep.select(
-        F.col("doc_id").alias(id_col), "cluster_id", "keep"
-    )
-
-
-def semantic_dedup_keep_banded(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bands: int = 4,
-    band_bits: int = 16,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_iter: int = 20,
-) -> DataFrame:
-    """SemDeDup keep-list over the BANDED near-dup pair graph — the
-    round-11 recall completion of ``semantic_dedup_keep``: candidate
-    generation via ``embedding_neardup_pairs_banded`` instead of the
-    single sign block, which the ×4-sf1 head-to-head measured at
-    289/400 planted-pair recall vs the 8-bit block's 216/400 at ×4.6
-    its speed (bench_escalation.json). More recalled pairs = more true
-    paraphrase clusters collapsed; a near-dup the blocking misses is a
-    duplicate that survives dedup, so the generator's recall IS the
-    tier's recall. Same output contract as ``semantic_dedup_keep``:
-    (vec_id, cluster_id, keep) over ALL vectors, keeper = cluster
-    minimum, unpaired vectors keep themselves."""
-    from market_flow_spark.extensions.dedup import dedup_keep_list
-
-    pairs = embedding_neardup_pairs_banded(
-        embeddings, threshold, n_bands, band_bits, id_col, emb_col
-    )
-    ids = embeddings.select(F.col(id_col).alias("doc_id"))
-    keep = dedup_keep_list(
-        ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"
-    )
-    return keep.select(
-        F.col("doc_id").alias(id_col), "cluster_id", "keep"
-    )
-
-
-def semantic_dedup_keep_routed(
-    embeddings: DataFrame,
-    threshold: float = 0.25,
-    n_bits: int = 8,
-    max_emission: float | None = NEAR_DUP_MAX_EMISSION,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    max_iter: int = 20,
-    n_full: int | None = None,
-) -> DataFrame:
-    """SemDeDup keep-list behind the emission-routed candidate generator
-    (round 12 — the same treatment ``embedding_neardup_pairs_routed``
-    gave the pair tier in round 11, one tier up): candidate pairs come
-    from the base ``n_bits`` sign block while the sampled emission
-    estimate fits ``max_emission``, from the banded sign-LSH ladder once
-    it doesn't — so no caller lands on the dominated single-block
-    generator (216/400 planted recall vs banded's 289/400 at ×4.6 the
-    speed, bench_escalation.json) just because the corpus outgrew the
-    block. Output contract identical on both routes: (vec_id,
-    cluster_id, keep) over ALL vectors, keeper = cluster minimum.
-    ``n_full`` (catalog stats) skips the chooser's corpus count."""
-    from market_flow_spark.extensions.dedup import dedup_keep_list
-
-    pairs = embedding_neardup_pairs_routed(
-        embeddings, threshold=threshold, n_bits=n_bits,
-        max_emission=max_emission, id_col=id_col, emb_col=emb_col,
-        n_full=n_full,
-    )
     ids = embeddings.select(F.col(id_col).alias("doc_id"))
     keep = dedup_keep_list(
         ids, pairs, max_iter=max_iter, id1="vec1", id2="vec2"

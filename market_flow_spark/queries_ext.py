@@ -1400,19 +1400,16 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("embedding_near_dup_routed", _near_dup_oracle())
 def q_embedding_near_dup_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The emission-routed shape of the embedding near-dup tier (round-8
-    verdict ask #2, embedding mirror; escalation redirected round-11 per
-    verdict ask #2): while the sampled Σ block-size² candidate estimate
-    fits the cap this is the base 8-bit sign block; once it doesn't, the
-    routed entry now executes the BANDED sign-LSH ladder instead of
-    walking the block width up — the round-10 ×4-sf1 head-to-head
-    (bench_escalation.json) measured bit-walking dominated on both axes
-    (131/400 planted recall vs the banded ladder's 289/400 at equal
-    emission). At every registered SF the estimate sits far under
-    ``NEAR_DUP_MAX_EMISSION`` so the router provably stays on the base
-    8-bit block (pinned by tests/test_steering.py, which also certifies
-    the ESCALATED banded route against its parameterized DuckDB twin on
-    a skewed synthetic corpus) — the driver row certifies the routed
+    """The emission-routed shape of the embedding near-dup tier: the base
+    8-bit sign block while the sampled Σ block-size² candidate estimate
+    fits the cap, the BANDED sign-LSH ladder once it doesn't — on the
+    ×4-sf1 corpus (bench_escalation.json) a block widened to 12 bits
+    recalled 151/400 planted pairs against the (4, 16) ladder's 289/400.
+    At every registered SF the estimate sits far under
+    ``NEAR_DUP_MAX_EMISSION`` so the router stays on the base 8-bit block
+    (pinned by tests/test_steering.py, which also certifies the
+    ESCALATED banded route against its parameterized DuckDB twin on a
+    skewed synthetic corpus) — the oracle row certifies the routed
     plumbing on real data; the escalation behavior is certified
     locally."""
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -1479,12 +1476,11 @@ WHERE {_floor_round_sql("dot / (sqrt(nsq1) * sqrt(nsq2))", 6)} >= {threshold}
     "embedding_near_dup_banded", _banded_near_dup_oracle(band_bits=10)
 )
 def q_embedding_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BANDED sign-LSH shape of the embedding near-dup tier (round-10:
-    the recall-repair for the escalation regime bench_escalation.json
-    measured): candidate iff all sign bits of ≥ 1 of 4 disjoint dim
-    slices agree, then exact cosine ≥ 0.25 verify. At the scale defaults
-    (4 × 16 bits) the expected emission equals a single 14-bit block's
-    (4·N²/2¹⁶ = N²/2¹⁴) with 1-(1-p¹⁶)⁴ recall instead of p¹⁴ — see
+    """The BANDED sign-LSH shape of the embedding near-dup tier:
+    candidate iff all sign bits of ≥ 1 of 4 disjoint dim slices agree,
+    then exact cosine ≥ 0.25 verify. At the scale defaults (4 × 16 bits)
+    the expected emission equals a single 14-bit block's (4·N²/2¹⁶ =
+    N²/2¹⁴) with 1-(1-p¹⁶)⁴ recall instead of p¹⁴ — see
     bench_escalation.json for the measured ×4-sf1 head-to-head.
     Registered at band_bits=10 for the same reason embedding_near_dup
     registers threshold 0.25: the synthetic embeddings are near-uniform,
@@ -1506,20 +1502,20 @@ def q_embedding_near_dup_banded_routed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The banded tier behind its emission-aware LAYOUT chooser
-    (``choose_banded_layout`` — the banded mirror of the single-block
-    width chooser): from the (4, 10) entry the ladder walks to fewer,
-    wider bands ((3, 21) → (2, 32) → (1, 64)) until the sampled
-    Σ-over-bands bucket-size² estimate fits the 2e6 cap. At every
-    registered SF the estimate sits far under the cap so the chooser
-    provably keeps the entry layout (pinned by
-    tests/test_steering.py::test_choose_banded_layout_stays_base_on_testdata,
-    which also certifies an ESCALATED layout against a DuckDB twin on a
-    degenerate-band corpus) — the driver row certifies the routed
+    (``choose_banded_layout``): from the (4, 10) entry the ladder walks
+    to fewer, wider bands ((3, 21) → (2, 32) → (1, 64)) until the
+    sampled Σ-over-bands bucket-size² estimate fits the 2e6 cap. At
+    every registered SF the estimate sits far under the cap so the
+    chooser keeps the entry layout (pinned by
+    tests/test_steering.py::test_choose_banded_layout_stays_base_on_testdata;
+    an ESCALATED layout is certified against a DuckDB twin on a
+    degenerate-band corpus there) — the oracle row certifies the routed
     plumbing on real data; the escalation behavior is certified
     locally."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, n_bands=4, band_bits=10
+    bands, bits = similarity.choose_banded_layout(emb, n_bands=4, band_bits=10)
+    return similarity.embedding_neardup_pairs_banded(
+        emb, threshold=0.25, n_bands=bands, band_bits=bits
     )
 
 
@@ -3216,33 +3212,35 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The embedding-tier analogue of dedup_clusters_minhash, catching
     paraphrase-level duplicates that share no surface n-grams."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.semantic_dedup_keep(emb, threshold=0.25, n_bits=8)
+    return similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    )
 
 
 @register("semantic_dedup_keep_routed", _semantic_keep_oracle())
 def q_semantic_dedup_keep_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup keep-list behind the emission-routed candidate generator
-    (round-11 verdict ask #3: close the supersession — the single-block
-    generator's 216/400 planted recall is dominated by the banded
-    ladder's 289/400 at ×4.6 the speed, so no caller should land on it
-    unaware once the corpus outgrows the block). At every registered SF
-    the sampled emission estimate sits far under NEAR_DUP_MAX_EMISSION
-    so the router provably stays on the base 8-bit block — byte-identical
-    pair graph to semantic_dedup_keep, hence the shared recursive-CTE
-    twin; the ESCALATED route (banded-ladder pair graph) is certified
-    against the parameterized banded keep twin on a degenerate-block
-    corpus by tests/test_steering.py. Same driver-row-certifies-plumbing,
-    local-tests-certify-escalation split as embedding_near_dup_routed."""
+    """SemDeDup keep-list over the emission-routed pair graph
+    (``embedding_neardup_pairs_routed``): the base 8-bit block under the
+    cap, the banded ladder beyond, so no caller lands on the single
+    block's 216/400 planted recall (vs the ladder's 289/400) unaware once
+    the corpus outgrows it. At every registered SF the router stays on
+    the base block — byte-identical pair graph to semantic_dedup_keep,
+    hence the shared recursive-CTE twin; the ESCALATED route is
+    certified against the parameterized banded keep twin on a
+    degenerate-block corpus by tests/test_steering.py."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.semantic_dedup_keep_routed(emb, threshold=0.25)
+    return similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
+    )
 
 
 def _semantic_keep_banded_oracle(
     n_bands: int = 4, band_bits: int = 16, threshold: float = 0.25
 ) -> str:
-    """Recursive-CTE twin of semantic_dedup_keep_banded: the same
-    connected-components construction over the BANDED pair graph
-    (pairs CTE = the parameterized banded near-dup twin)."""
+    """Recursive-CTE twin of the keep-list over the BANDED pair graph:
+    the same connected-components construction as
+    ``_semantic_keep_oracle`` (pairs CTE = the parameterized banded
+    near-dup twin)."""
     return f"""
 WITH RECURSIVE p AS ({_banded_near_dup_oracle(n_bands, band_bits, threshold)}),
 edges AS (
@@ -3268,17 +3266,20 @@ FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.vec_id
     _semantic_keep_banded_oracle(band_bits=10),
 )
 def q_semantic_dedup_keep_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup keep-list over the BANDED pair graph (round 11): the
-    candidate generator whose ×4-sf1 head-to-head recall (289/400
-    planted pairs vs the 8-bit block's 216/400, at ×4.6 its speed)
-    makes it the scale shape of the semantic tier — a near-dup the
-    blocking misses is a duplicate that survives dedup. Registered at
-    band_bits=10 for the same driver-row-count reason as
-    embedding_near_dup_banded (the synthetic embeddings are
-    near-uniform; 16-bit bands leave ~1 pair at sf0.01)."""
+    """SemDeDup keep-list over the BANDED pair graph: the candidate
+    generator whose ×4-sf1 recall (289/400 planted pairs vs the 8-bit
+    block's 216/400, at 5.6× its speed) makes it the scale shape of the
+    semantic tier — a near-dup the blocking misses is a duplicate that
+    survives dedup. Registered at band_bits=10 for the same
+    row-count reason as embedding_near_dup_banded (the synthetic
+    embeddings are near-uniform; 16-bit bands leave ~1 pair at
+    sf0.01)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return similarity.semantic_dedup_keep_banded(
-        emb, threshold=0.25, n_bands=4, band_bits=10
+    return similarity.semantic_dedup_keep(
+        emb,
+        similarity.embedding_neardup_pairs_banded(
+            emb, threshold=0.25, n_bands=4, band_bits=10
+        ),
     )
 
 

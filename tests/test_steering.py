@@ -1,6 +1,6 @@
 """Emission-aware steering of the exact pairwise tiers (round-8 verdict
 ask #2): the word-Jaccard strategy selector and the embedding near-dup
-block-width chooser must route off the exact/8-bit shapes when a sampled
+router must route off the exact/8-bit shapes when a sampled
 candidate-emission estimate exceeds the documented cap, and the routed
 outputs must stay oracle-checkable.
 
@@ -196,7 +196,7 @@ def test_unknown_strategy_still_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# embedding near-dup block-width chooser
+# embedding near-dup router
 # ---------------------------------------------------------------------------
 
 
@@ -216,31 +216,15 @@ def _skewed_embeddings(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_choose_bits_escalates_on_skewed_block(spark):
-    emb = _skewed_embeddings(spark)
-    bits = similarity.choose_near_dup_bits(emb, max_emission=2e4)
-    assert 8 < bits <= 16
-    # and the default cap leaves the base width alone (1.6e5 << 1e9)
-    assert similarity.choose_near_dup_bits(emb) == 8
-
-
-def test_choose_bits_default_stays_8_on_testdata(tables):
-    """Pins the registered embedding_near_dup_routed oracle's n_bits=8
-    assumption at driver SFs."""
-    assert similarity.choose_near_dup_bits(tables["embeddings"]) == 8
-
-
 def test_escalated_width_matches_duckdb_twin(spark):
-    """The single-block shape at an ESCALATED width stays a
-    bit-reproducible contract: run ``embedding_neardup_pairs`` directly
-    at the chooser's escalated width on the skewed corpus and check it
-    against the DuckDB twin generated at that width. (Round-11: the
-    routed ENTRY no longer executes this shape — its escalation regime
-    goes to the banded ladder, certified below — but the wide block
-    remains a caller-selectable tier and must stay twin-true.)"""
+    """The single-block shape at a widened 12-bit width (the width
+    bench_escalation.json measured) stays a bit-reproducible contract
+    on the skewed corpus, checked against the DuckDB twin generated at
+    that width. The routed entry never executes it — its escalation
+    regime goes to the banded ladder — but the wide block remains a
+    caller-selectable tier and must stay twin-true."""
     emb = _skewed_embeddings(spark)
-    bits = similarity.choose_near_dup_bits(emb, max_emission=2e4)
-    assert bits > 8
+    bits = 12
     wide = similarity.embedding_neardup_pairs(
         emb, threshold=0.25, n_bits=bits
     )
@@ -448,7 +432,7 @@ def _degenerate_band0_embeddings(spark):
 def test_choose_banded_layout_stays_base_on_testdata(tables):
     """Pins the registered embedding_near_dup_banded_routed oracle's
     static layout assumption at driver SFs (mirror of
-    test_choose_bits_default_stays_8_on_testdata)."""
+    test_routed_entry_stays_single_block_under_cap)."""
     assert similarity.choose_banded_layout(
         tables["embeddings"], n_bands=4, band_bits=10
     ) == (4, 10)
@@ -472,8 +456,8 @@ def test_banded_escalated_layout_matches_duckdb_twin(spark):
 
     emb = _degenerate_band0_embeddings(spark)
     bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
-    routed = similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, max_emission=2e4
+    routed = similarity.embedding_neardup_pairs_banded(
+        emb, threshold=0.25, n_bands=bands, band_bits=bits
     )
     pdf = pd.DataFrame(
         {
@@ -586,8 +570,11 @@ def test_semantic_dedup_keep_banded_planted_clusters(spark):
     emb = _varied_band_embeddings(spark)
     rows = {
         r["vec_id"]: (r["cluster_id"], r["keep"])
-        for r in similarity.semantic_dedup_keep_banded(
-            emb, threshold=0.25, n_bands=4, band_bits=16
+        for r in similarity.semantic_dedup_keep(
+            emb,
+            similarity.embedding_neardup_pairs_banded(
+                emb, threshold=0.25, n_bands=4, band_bits=16
+            ),
         ).collect()
     }
     assert len(rows) == 215
@@ -609,9 +596,10 @@ def test_banded_32bit_rung_routes_and_matches_twin(spark):
     deep-rung corpus — the chooser must land on (2, 32) — and certify
     the executed output against the BIGINT-keyed DuckDB twin."""
     emb = _deep_rung_embeddings(spark)
-    assert similarity.choose_banded_layout(emb, max_emission=2e4) == (2, 32)
-    routed = similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, max_emission=2e4
+    layout = similarity.choose_banded_layout(emb, max_emission=2e4)
+    assert layout == (2, 32)
+    routed = similarity.embedding_neardup_pairs_banded(
+        emb, threshold=0.25, n_bands=layout[0], band_bits=layout[1]
     )
     assert routed.count() >= 10  # the planted duplicate pairs
     _assert_banded_matches_twin(emb, routed, 2, 32)
@@ -653,36 +641,60 @@ def test_banded_ladder_caps_rung_width_at_64_for_wide_dims(spark):
         emb, n_bands=4, band_bits=32, max_emission=400.0
     )
     assert bits <= 64
-    out = similarity.embedding_neardup_pairs_banded_routed(
-        emb, threshold=0.25, n_bands=4, band_bits=32, max_emission=400.0
+    out = similarity.embedding_neardup_pairs_banded(
+        emb, threshold=0.25, n_bands=bands, band_bits=bits
     )
     assert out.count() >= 1  # the planted dup survives every layout
 
 
-def test_routed_entry_launches_no_full_job_when_routing_disabled(spark):
-    """Round-11 review finding: the routed entry briefly counted the
-    corpus even when max_emission=None made the chooser a no-op. The
-    count must stay lazy: with routing disabled the plan builds and runs
-    without the chooser ever needing n_full — pinned by handing the
-    chooser an unanswerable n_full=None on a corpus whose dim equals the
-    base width (early exit before any count)."""
-    emb = _skewed_embeddings(spark)
-    # dim 16 == max_bits cap at 16: hi <= n_bits -> early exit, no count
-    bits = similarity.choose_near_dup_bits(
-        emb, n_bits=16, max_emission=2e4, max_bits=16
+def _construct_jobs(spark, group, build):
+    """Jobs launched while ``build()`` constructs a plan (nothing is
+    executed): counted by job group, so box load cannot move it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_routed_entry_construct_job_budget(spark, tables):
+    """The routed entry reads ONE bounded sign sample for both decisions
+    (block estimate, then the ladder walk), and counts the corpus only
+    behind its early exits. Routing off launches nothing; under the cap
+    it is the dim probe + the sample; escalating adds only the banded
+    tier's dim check (the two-sample router took 5 here)."""
+    skewed = _skewed_embeddings(spark)
+    assert _construct_jobs(
+        spark, "routed_off",
+        lambda: similarity.embedding_neardup_pairs_routed(
+            skewed, threshold=0.25, max_emission=None
+        ),
+    ) == 0
+    under = _construct_jobs(
+        spark, "routed_under_cap",
+        lambda: similarity.embedding_neardup_pairs_routed(
+            tables["embeddings"], threshold=0.25
+        ),
     )
-    assert bits == 16
-    # max_emission=None short-circuits before any job at all
-    assert similarity.choose_near_dup_bits(emb, max_emission=None) == 8
-    out = similarity.embedding_neardup_pairs_routed(
-        emb, threshold=0.25, max_emission=None
+    assert 0 < under <= 2, under
+    escalating = _construct_jobs(
+        spark, "routed_escalating",
+        lambda: similarity.embedding_neardup_pairs_routed(
+            skewed, threshold=0.25, max_emission=2e4
+        ),
     )
-    assert out.count() >= 0
+    assert 0 < escalating <= 3, escalating
 
 
 def test_band_sign_keys_rejects_unpackable_widths(spark):
     """Widths past 64 have no single-BIGINT packing — the guard must
-    raise at plan build, not overflow silently."""
+    raise at plan build, not overflow silently. The single block's INT
+    bucket holds at most 31 bits: wider fails at plan build too, not
+    with CAST_OVERFLOW at execution."""
     emb = _deep_rung_embeddings(spark)
     with pytest.raises(ValueError, match=r"band_bits"):
         similarity.embedding_neardup_pairs_banded(
@@ -690,6 +702,9 @@ def test_band_sign_keys_rejects_unpackable_widths(spark):
         )
     with pytest.raises(ValueError, match=r"n_bands"):
         similarity.band_sign_keys(F.col("embedding"), 0, 8)
+    for n_bits in (0, 32):
+        with pytest.raises(ValueError, match=r"n_bits"):
+            similarity.embedding_neardup_pairs(emb, n_bits=n_bits)
 
 
 def _distinct_band_embeddings(spark, n=2000):
@@ -727,10 +742,10 @@ def test_banded_estimator_does_not_inflate_singleton_diagonal(spark):
 
 
 def test_block_chooser_does_not_inflate_singleton_diagonal(spark):
-    """Single-block mirror of the diagonal regression: 12-bit keys are
-    all-distinct (true Σc² = N = 2048 ≤ the 5e3 cap) so the walk must
-    stop at the base 12 bits; the naive estimator read 512·(2048/512)²
-    = 8192 > cap at EVERY width and walked to max_bits."""
+    """Single-block mirror of the diagonal regression, on the shared
+    estimator with one band: 12-bit keys are all-distinct (true Σc² =
+    N = 2048 ≤ the 5e3 cap), so the 12-bit block fits; the naive
+    estimator read 512·(2048/512)² = 8192 > cap and escalated."""
     rows = []
     for i in range(2048):
         vec = [
@@ -741,12 +756,11 @@ def test_block_chooser_does_not_inflate_singleton_diagonal(spark):
         ]
         rows.append((i, vec))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert (
-        similarity.choose_near_dup_bits(
-            emb, n_bits=12, max_emission=5e3, sample_rows=512, max_bits=16
-        )
-        == 12
+    patterns, n_full = similarity._sign_sample(
+        emb, 16, "embedding", "vec_id", sample_rows=512
     )
+    assert (len(patterns), n_full) == (512, 2048)
+    assert similarity._sign_emission(patterns, n_full, 1, 12) <= 5e3
 
 
 def test_banded_layout_estimator_exact_at_full_coverage(spark):
@@ -823,13 +837,17 @@ def test_choose_banded_layout_last_resort_is_structurally_valid(spark):
 
 
 def test_semantic_keep_routed_stays_base_under_cap(tables):
-    """semantic_dedup_keep_routed (round 12, verdict ask #3): under the
-    default cap the routed keep-list's pair graph is byte-identical to
-    the single-block generator's — the registered twin's assumption, on
-    the driver's own embeddings table."""
+    """Under the default cap the keep-list over the routed pair graph is
+    byte-identical to the one over the single block — the registered
+    semantic_dedup_keep_routed twin's assumption, on the test SF's
+    embeddings table."""
     emb = tables["embeddings"]
-    routed = similarity.semantic_dedup_keep_routed(emb, threshold=0.25)
-    base = similarity.semantic_dedup_keep(emb, threshold=0.25, n_bits=8)
+    routed = similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs_routed(emb, threshold=0.25)
+    )
+    base = similarity.semantic_dedup_keep(
+        emb, similarity.embedding_neardup_pairs(emb, threshold=0.25, n_bits=8)
+    )
     assert sorted(map(tuple, routed.collect())) == sorted(
         map(tuple, base.collect())
     )
@@ -843,8 +861,11 @@ def test_semantic_keep_routed_escalates_onto_banded_graph(spark):
     from market_flow_spark.queries_ext import _semantic_keep_banded_oracle
 
     emb = _skewed_embeddings(spark)
-    routed = similarity.semantic_dedup_keep_routed(
-        emb, threshold=0.25, max_emission=2e4
+    routed = similarity.semantic_dedup_keep(
+        emb,
+        similarity.embedding_neardup_pairs_routed(
+            emb, threshold=0.25, max_emission=2e4
+        ),
     )
     bands, bits = similarity.choose_banded_layout(emb, max_emission=2e4)
     assert (bands, bits) != (4, 16)  # genuinely the escalated regime

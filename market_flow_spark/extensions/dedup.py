@@ -22,6 +22,8 @@ All tiers are pure DataFrame ops — explode/groupBy/join — no UDFs.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -160,6 +162,26 @@ def _threshold_ratio(threshold: float) -> tuple[int, int]:
     return max(num, 0), den
 
 
+def _prefix_len(num: int, den: int) -> Column:
+    """Prefix-filter slice length of the ``sz``-element set in the row:
+    sz - ceil(sz*num/den) + 1, the ⌊(1-t)·sz⌋+1 of the prefix theorem, in
+    BIGINT integer arithmetic (sz can be 1e5+ and num up to ~1e6, so the
+    product overflows INT32; double rounding could shorten the prefix by
+    one element for unlucky (sz, t) and silently drop qualifying pairs).
+    ``_prefix_len_py`` is its driver-side twin."""
+    return F.expr(
+        f"CAST(sz - ((CAST(sz AS BIGINT) * {num} + {den - 1}) div {den}) + 1"
+        " AS INT)"
+    )
+
+
+def _prefix_len_py(sz: int, num: int, den: int) -> int:
+    """``_prefix_len`` for one set size, in the same integer arithmetic
+    (``div`` truncates toward zero, which is floor for the non-negative
+    operands both sides see)."""
+    return sz - (sz * num + den - 1) // den + 1
+
+
 def _count_common_pairs(arrs: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard pairs via the count-common shape: full inverted-index
     self-join → per-pair match count (map-side combine) → algebraic
@@ -216,24 +238,16 @@ def _prefix_candidates(arrs: DataFrame, threshold: float) -> DataFrame:
     posting lists (and the candidate count, quadratically) by ~(1-t)².
     A length filter (min size ≥ t · max size, necessary for J ≥ t) prunes
     further. Exactness is untouched: every qualifying pair provably
-    survives, and the verifier computes exact Jaccard.
-
-    ceil(sz·t) is computed in exact integer arithmetic (t as a rational
-    num/den, ceil(a/b) = -((-a) div b)): double rounding could shorten the
-    prefix by one element for unlucky (sz, t) and silently drop qualifying
-    pairs from a tier documented as exact."""
+    survives, and the verifier computes exact Jaccard. The slice length
+    is ``_prefix_len``'s exact integer arithmetic."""
     # the rational approximation must never exceed the float threshold the
     # verifier uses, or the prefix could be one element too short for
     # borderline pairs — _threshold_ratio guarantees num/den <= threshold.
     num, den = _threshold_ratio(threshold)
-    # all arithmetic in BIGINT: sz can be 1e5+ and num up to ~1e6, so the
-    # product overflows INT32 (a runtime error under ANSI mode, a silently
-    # negative prefix length otherwise).
-    pref_len = F.expr(
-        f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1 AS INT)"
-    )
     pref = arrs.select(
-        "doc_id", "sz", F.explode(F.slice("sh", F.lit(1), pref_len)).alias("word")
+        "doc_id",
+        "sz",
+        F.explode(F.slice("sh", F.lit(1), _prefix_len(num, den))).alias("word"),
     )
     # Self-join via ALIASES of the identical subtree (not two renamed
     # projections): both sides canonicalize to the same plan, so the
@@ -417,25 +431,35 @@ def freq_ordered_arrays(arrs: DataFrame) -> DataFrame:
     )
 
 
-def estimate_index_emission(
-    arrs: DataFrame, n_full: int, n_sample: int
+def _word_sample(
+    docs: DataFrame, text_col: str, sample_docs: int
+) -> list[list[str]]:
+    """Distinct-word sets of the ``sample_docs`` lowest ``doc_id`` rows,
+    empty sets included, pulled in one bounded Spark action: at most
+    ``sample_docs`` word sets reach the driver.
+
+    The sample is DETERMINISTIC (TakeOrdered on ``doc_id``, the same
+    contract as ``estimate_exact_substring_window_rows`` and the near-dup
+    tier's ``_sign_sample``): a bare ``limit`` is partition-order
+    dependent, so two runs on the same data could flip the pick near a
+    boundary."""
+    sample = docs.orderBy("doc_id").limit(sample_docs)
+    rows = doc_shingle_arrays(sample, 1, text_col).select("sh").collect()
+    return [r["sh"] for r in rows]
+
+
+def _index_emission(
+    sets: list[list[str]], n_full: int, n_sample: int
 ) -> float:
     """Scale a SAMPLE's inverted-index join emission Σ df(w)² to the full
     corpus: under frequency stationarity (a word's document share is the
     same in the sample as in the corpus), df_full ≈ df_sample · (N/n), so
-    Σ df_full² ≈ (N/n)² · Σ df_sample². ``arrs`` is the sampled
-    (doc_id, sh) frame whose exploded elements feed the index — pass the
-    full arrays for the count-common shape, the sliced prefixes for the
-    prefix-filtered shape. One sample-bounded aggregate."""
-    row = (
-        arrs.select(F.explode("sh").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.col("df") * F.col("df")).alias("sum_df2"))
-        .first()
-    )
+    Σ df_full² ≈ (N/n)² · Σ df_sample². ``sets`` are the sampled element
+    lists that feed the index — the full word sets for the count-common
+    shape, the sliced prefixes for the prefix-filtered shape."""
+    df = Counter(w for s in sets for w in s)
     scale = (n_full / n_sample) ** 2 if n_sample else 1.0
-    return float(row["sum_df2"] or 0) * scale
+    return float(sum(c * c for c in df.values())) * scale
 
 
 # Documented routing threshold for the exact unigram tier (candidate rows
@@ -467,13 +491,16 @@ def choose_word_jaccard_strategy(
     max_emission: float | None = WORD_JACCARD_MAX_EMISSION,
     n_full: int | None = None,
 ) -> str:
-    """Cost-based strategy pick for the unigram tier, from a BOUNDED sample.
+    """Cost-based strategy pick for the unigram tier, from the word sets of
+    the ``sample_docs`` lowest ``doc_id`` rows (``_word_sample``: one
+    bounded Spark action, at most ``sample_docs`` sets on the driver). All
+    stats are then folded in Python.
 
     The count-common shape's cost is the inverted-index join emission
-    Σ df(w)² — quadratic in the heaviest posting list. On a bounded sample
-    of documents, the share p of docs containing the most common token
-    estimates that heaviest list; its emission alone is (p·N)² pairs, which
-    is superlinear in N whenever p is corpus-fraction-scale (stop words).
+    Σ df(w)² — quadratic in the heaviest posting list. In the sample, the
+    share p of docs containing the most common token estimates that
+    heaviest list; its emission alone is (p·N)² pairs, which is
+    superlinear in N whenever p is corpus-fraction-scale (stop words).
     So: a stop-word-grade top token → 'freq_ordered' (prefix filter keeps
     such tokens out of the index); an effectively disjoint vocabulary
     (dense near-dup clusters, synthetic IDs) → 'count_common', whose
@@ -488,134 +515,79 @@ def choose_word_jaccard_strategy(
     join is pure overhead and count-common (whose emission then tracks the
     output) wins regardless of posting-list length. Measured on the bench
     corpus (31 tokens / 500 docs, 41% of all pairs qualifying):
-    count_common 1.26 s vs freq_ordered 4.30 s.
+    count_common 1.26 s vs freq_ordered 4.30 s. A saturated vocabulary of
+    ≤ 64 tokens goes to 'bitmask' instead.
 
-    One small Spark job over ≤ sample_docs documents — negligible next to
-    the dedup itself, and the 100 TB-safe choice is the fallback on any
-    ambiguity.
+    The freq_ordered pick is a one-sided bet. On sparse corpora of 15
+    unique + 10 shared stop tokens per doc (32 cores), the two shapes tie
+    within box noise at 2 500 docs (~0.9 s each; the quadratic emission is
+    only 3e7 rows); at 10 000 docs count_common's 5e8-row emission takes
+    46.6 s vs freq_ordered's 1.5 s (31×), and the gap grows as N². A wrong
+    freq_ordered pick costs noise, a right one saves unbounded work.
 
-    Measured asymmetry of the freq_ordered pick (round-7, sparse corpora
-    of 15 unique + 10 shared stop tokens per doc, 32 cores): at 2 500 docs
-    the two strategies tie within box noise (~0.9 s each — the quadratic
-    emission is only 3e7 rows); at 10 000 docs count_common's 5e8-row
-    emission takes 46.6 s vs freq_ordered's 1.5 s (31×), and the gap keeps
-    growing as N². So a freq_ordered pick costs at most noise where it is
-    wrong and saves unbounded quadratic work where it is right — the
-    correct side of the bet for a selector that must survive 100 TB.
+    **Emission routing.** The best exact shape can still be output-bound:
+    at sf1 the picked shape emitted Σdf² ≈ 4.5e9 candidates (138 s),
+    growing quadratically. So the picked shape's OWN index emission is
+    estimated from the same sample (``_index_emission``) — Σdf² over full
+    sets for count_common, over the ⌊(1-t)·n⌋+1 rarest-first prefixes for
+    freq_ordered (ordered by sample df, then word, and sliced with
+    ``_prefix_len_py``, the same integer arithmetic ``_prefix_candidates``
+    feeds the join; the prefix filter is what bounds that shape, so a
+    naive estimate would mis-route stop-word corpora) — scaled by
+    (N/n_sample)². Above ``max_emission`` (``WORD_JACCARD_MAX_EMISSION`` =
+    1e10 ≈ 5 min of pure emission on the bench box; ``None`` disables
+    routing) the answer is ``'lsh_prefilter'``: MinHash-LSH candidates
+    over unigrams + exact verification, same output schema, recall
+    bounded by the 4×4 band S-curve — per-pair 1-(1-J⁴)⁴: ~0.67 for a
+    just-qualifying J=0.7 pair, 0.91 at J=0.82, ~0.999 at J≥0.95
+    (measured 36/40 and 40/40 on deterministic clone corpora,
+    tests/test_steering.py). The estimate is ~2×-noisy near the cap, where
+    both shapes are acceptable; the cap stops the unbounded tail. The
+    bitmask shape is never routed: its ≤64-token vocabulary and
+    ``max_masks`` guard already bound it.
 
-    **Emission routing (round-9):** picking the best *exact* shape is not
-    enough — the sf1 audit showed the chosen shape can be optimal yet
-    output-bound (Σdf² ≈ 4.5e9 candidates → 138 s; growing quadratically,
-    a 100 TB caller would launch an hours-to-days job). So the selector now
-    estimates the picked shape's OWN index emission from the same bounded
-    sample — Σdf² over full arrays for count_common, over the ⌊(1-t)·n⌋+1
-    prefixes for freq_ordered (the prefix filter is exactly what bounds
-    that shape, so its estimate must be prefix-grained or stop-word corpora
-    would be mis-routed) — scaled by (N/n_sample)², and returns
-    ``'lsh_prefilter'`` when it exceeds ``max_emission``
-    (``WORD_JACCARD_MAX_EMISSION`` = 1e10 ≈ 5 min of pure emission on the
-    bench box; ``None`` disables routing). The routed shape is
-    MinHash-LSH candidate generation over unigrams + exact word-Jaccard
-    verification of candidates only: identical output schema, recall
-    bounded by the 4×4 band S-curve instead of exhaustive — per-pair
-    recall 1-(1-J⁴)⁴: ~0.67 for a just-qualifying J=0.7 pair, 0.91 at
-    J=0.82, ~0.999 at J≥0.95 (measured 36/40 and 40/40 respectively on
-    deterministic clone corpora, tests/test_steering.py). The
-    estimate is sampled and ~2×-noisy near the cap — both shapes are
-    acceptable there; the cap exists to stop the unbounded tail, not to
-    split hairs at the boundary. The bitmask shape is never routed: its
-    ≤64-token vocabulary and ``max_masks`` guard already bound it.
+    The corpus size N comes from (in order): ``n_full`` if the caller
+    knows it; else the sample's own row count when it is shorter than
+    ``sample_docs`` (the sample IS the corpus); else one ``docs.count()``
+    — a full-input action, paid only when routing is on. Empty-text docs
+    count in N but not in n_sample, which over-estimates slightly and errs
+    toward routing, the safe side.
 
-    The corpus size the scale factor needs comes from (in order):
-    ``n_full`` if the caller already knows it (e.g. a pipeline that just
-    counted the corpus — keeps the chooser's contract at one
-    sample-bounded job even when ``docs`` is an expensive upstream
-    transform); else, when the ``limit(sample_docs)`` pull returns fewer
-    rows than requested, the sample IS the corpus and its own row count
-    is exact; only otherwise does the chooser run ``docs.count()`` — one
-    full-input action, the price of routing on an unknown-size input."""
-    # the bounded sampled index is persisted so the two stat grains (per-
-    # word dfs, distinct doc count) share one shingle build instead of
-    # re-tokenizing the sample per action; docs with empty token sets are
-    # invisible to countDistinct, which is fine — they contribute no
-    # posting lists, so they are irrelevant to the strategy choice
-    raw_sample = docs.limit(sample_docs).persist()
-    sample = doc_shingle_arrays(raw_sample, 1, text_col).persist()
-    exploded = sample.select(F.col("doc_id"), F.explode("sh").alias("word"))
-    try:
-        row = (
-            exploded.groupBy("word")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .agg(
-                F.max("df").alias("max_df"),
-                F.sum("df").alias("total"),
-                F.count(F.lit(1)).alias("vocab"),
-                F.sum(F.col("df") * F.col("df")).alias("sum_df2"),
-            )
-            .first()
-        )
-        n_docs = (
-            exploded.agg(F.countDistinct("doc_id").alias("n")).first()["n"] or 0
-        )
-        vocab = row["vocab"] or 0
-        top_share = (row["max_df"] or 0) / max(row["total"] or 0, 1)
-        if vocab < 0.5 * n_docs:
-            # saturated token universe → output is dense. If the sampled
-            # vocabulary also fits one machine word, the bitset path skips
-            # the inverted index entirely (word_jaccard_pairs re-verifies
-            # against the FULL vocabulary and falls back to count_common if
-            # the sample under-counted); otherwise count_common's emission
-            # tracks the dense output and is the optimal shape.
-            if vocab <= 64:
-                return "bitmask"
-            pick = "count_common"
-        else:
-            # >2% of all sampled token occurrences in ONE token =
-            # shared-vocabulary corpus; posting-list join emission would be
-            # quadratic vs sparse output.
-            pick = "count_common" if top_share <= 0.02 else "freq_ordered"
-        if max_emission is None:
-            return pick
-        # route off the exact tier when the PICKED shape's estimated
-        # emission exceeds the cap. n_full counts all docs (empty-text docs
-        # included) while n_docs counts tokenized sample docs — the scale
-        # factor over-estimates slightly, which errs toward routing: the
-        # safe side of the bet (the routed tier is near-linear; the exact
-        # tier's tail is unbounded).
-        if n_full is None:
-            sampled_rows = raw_sample.count()
-            if sampled_rows < sample_docs:
-                # limit() returned everything — the sample IS the corpus;
-                # no full-input count needed
-                n_full = sampled_rows
-            else:
-                n_full = docs.count()
-        if n_full <= n_docs:
-            # sample IS the corpus — the estimate below is exact
-            n_full = n_docs
-        if pick == "count_common":
-            est = float(row["sum_df2"] or 0) * (
-                (n_full / n_docs) ** 2 if n_docs else 1.0
-            )
-        else:
-            # the prefix filter is what bounds this shape, so estimate at
-            # prefix grain: freq-order the sampled arrays and index only
-            # the ⌊(1-t)·n⌋+1 rarest elements — the same slice
-            # _prefix_candidates will feed the join (exact integer
-            # arithmetic shared via _threshold_ratio).
-            num, den = _threshold_ratio(threshold)
-            pref_len = F.expr(
-                f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1"
-                " AS INT)"
-            )
-            pref = freq_ordered_arrays(sample).select(
-                F.slice("sh", F.lit(1), pref_len).alias("sh")
-            )
-            est = estimate_index_emission(pref, n_full, n_docs)
-        return pick if est <= max_emission else "lsh_prefilter"
-    finally:
-        sample.unpersist()
-        raw_sample.unpersist()
+    Jobs: the sample action (its shingle build may add one spread
+    exchange: 1–2 jobs), plus the ``docs.count()`` above when it runs."""
+    sample = _word_sample(docs, text_col, sample_docs)
+    sets = [s for s in sample if s]
+    n_docs = len(sets)
+    df = Counter(w for s in sets for w in s)
+    vocab = len(df)
+    top_share = max(df.values(), default=0) / max(sum(df.values()), 1)
+    if vocab < 0.5 * n_docs:
+        # saturated token universe → output is dense. If the sampled
+        # vocabulary also fits one machine word, the bitset path skips
+        # the inverted index entirely (word_jaccard_pairs re-verifies
+        # against the FULL vocabulary and falls back to count_common if
+        # the sample under-counted).
+        if vocab <= 64:
+            return "bitmask"
+        pick = "count_common"
+    else:
+        # >2% of all sampled token occurrences in ONE token =
+        # shared-vocabulary corpus; posting-list join emission would be
+        # quadratic vs sparse output.
+        pick = "count_common" if top_share <= 0.02 else "freq_ordered"
+    if max_emission is None:
+        return pick
+    if n_full is None:
+        n_full = len(sample) if len(sample) < sample_docs else docs.count()
+    n_full = max(n_full, n_docs)
+    if pick == "freq_ordered":
+        num, den = _threshold_ratio(threshold)
+        sets = [
+            sorted(s, key=lambda w: (df[w], w))[: _prefix_len_py(len(s), num, den)]
+            for s in sets
+        ]
+    est = _index_emission(sets, n_full, n_docs)
+    return pick if est <= max_emission else "lsh_prefilter"
 
 
 def word_jaccard_pairs(
@@ -635,8 +607,8 @@ def word_jaccard_pairs(
     ``strategy`` selects the physical shape:
 
     - ``'auto'`` (default): pick per-corpus from bounded sampled vocabulary
-      stats (``choose_word_jaccard_strategy``; costs one small job at plan
-      time) — stop-word-skewed sparse corpora get the prefix path,
+      stats (``choose_word_jaccard_strategy``; one bounded sample action
+      at plan time) — stop-word-skewed sparse corpora get the prefix path,
       saturated/dense ones the count-common path.
     - ``'freq_ordered'``: prefix-filtered verify over rarest-first arrays
       (``freq_ordered_arrays``); stop-word posting lists never enter the
@@ -829,9 +801,7 @@ def ngram_contamination(
     space is |probe|×|corpus| pruned by prefix+length — never a self-join
     of the union, and the (typically small) probe side drives the join."""
     num, den = _threshold_ratio(threshold)
-    pref_len = F.expr(
-        f"CAST(sz - (-((-CAST(sz AS BIGINT) * {num}) div {den})) + 1 AS INT)"
-    )
+    pref_len = _prefix_len(num, den)
 
     def index(docs: DataFrame, side: str) -> DataFrame:
         arrs = doc_shingle_arrays(docs, n, text_col)
@@ -1400,20 +1370,21 @@ def estimate_exact_substring_window_rows(
     ``choose_exact_substring_route`` on the same data could flip
     'exact' vs 'winnow_containment' near the 6e8 threshold."""
     order_key = "doc_id" if "doc_id" in docs.columns else docs.columns[0]
-    raw = docs.orderBy(order_key).limit(sample_docs).persist()
-    try:
-        row = raw.agg(
+    row = (
+        docs.orderBy(order_key)
+        .limit(sample_docs)
+        .agg(
             F.sum(F.length(_norm_text(text_col))).alias("chars"),
             F.count(F.lit(1)).alias("n"),
-        ).first()
-        n_s = int(row["n"] or 0)
-        if not n_s:
-            return 0.0
-        if n_full is None:
-            n_full = n_s if n_s < sample_docs else docs.count()
-        return float(row["chars"] or 0) * (max(n_full, n_s) / n_s)
-    finally:
-        raw.unpersist()
+        )
+        .first()
+    )
+    n_s = int(row["n"] or 0)
+    if not n_s:
+        return 0.0
+    if n_full is None:
+        n_full = n_s if n_s < sample_docs else docs.count()
+    return float(row["chars"] or 0) * (max(n_full, n_s) / n_s)
 
 
 def choose_exact_substring_route(

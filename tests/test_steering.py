@@ -300,8 +300,8 @@ def test_routed_word_jaccard_twin_is_parameterized_correctly():
 
 def test_emission_estimate_exact_when_sample_covers_corpus(spark):
     """With the sample covering the whole corpus the (N/n)² scale factor is
-    1 and estimate_index_emission must equal the true Σ df² — the estimator
-    is exact arithmetic plus frequency-stationarity scaling, nothing else."""
+    1 and _index_emission must equal the true Σ df² — the estimator is
+    exact arithmetic plus frequency-stationarity scaling, nothing else."""
     docs = _dense_shared_vocab(spark)
     arrs = dedup.doc_shingle_arrays(docs, 1, "text")
     words = [
@@ -314,8 +314,92 @@ def test_emission_estimate_exact_when_sample_covers_corpus(spark):
     df = Counter(w for _, w in words)
     true_sum = sum(c * c for c in df.values())
     n_docs = len({d for d, _ in words})
-    est = dedup.estimate_index_emission(arrs, n_docs, n_docs)
+    sets = dedup._word_sample(docs, "text", 2048)
+    est = dedup._index_emission(sets, n_docs, n_docs)
     assert est == true_sum
+
+
+def test_prefix_len_is_the_documented_ceil(spark):
+    """The prefix-filter slice is sz - ceil(sz·t) + 1 = ⌊(1-t)·sz⌋ + 1,
+    and the SQL helper agrees with its driver-side twin. (25, 0.7) is
+    the stop-word corpus above: 8 elements, not 9."""
+    pins = {
+        (25, 0.7): 8, (10, 0.7): 4, (3, 0.7): 1, (1, 0.7): 1,
+        (20, 0.5): 11, (7, 0.5): 4, (10, 0.9): 2, (25, 0.8): 6,
+        (100, 0.7): 31, (0, 0.7): 1,
+    }
+    for (sz, t), want in pins.items():
+        assert dedup._prefix_len_py(sz, *dedup._threshold_ratio(t)) == want, (
+            sz, t,
+        )
+    sizes = spark.range(0, 130).select(F.col("id").cast("int").alias("sz"))
+    for t in (0.3, 0.5, 0.7, 0.8, 0.9, 0.95, 1.0):
+        num, den = dedup._threshold_ratio(t)
+        got = {
+            r["sz"]: r["n"]
+            for r in sizes.select(
+                "sz", dedup._prefix_len(num, den).alias("n")
+            ).collect()
+        }
+        assert got == {
+            sz: dedup._prefix_len_py(sz, num, den) for sz in range(130)
+        }, t
+
+
+def _saturated_100_tokens(spark):
+    """500 docs × 30 words over a 100-token vocabulary: saturated
+    (vocab < 0.5·N) but too wide for one machine word."""
+    rows = [
+        (i, " ".join(f"t{(i * 3 + j * 7) % 100}" for j in range(30)))
+        for i in range(500)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize(
+    "corpus, want",
+    [
+        ("empty", "count_common"),
+        ("all_null", "count_common"),
+        ("single", "freq_ordered"),
+        ("saturated_100", "count_common"),
+    ],
+)
+def test_chooser_on_degenerate_corpora(spark, corpus, want):
+    """Empty and all-NULL samples hold no word set (no posting list, zero
+    emission); a single doc's three words each hold a third of the sampled
+    occurrences, which reads as stop-word skew; a 100-token saturated
+    corpus is too wide for the bitmask."""
+    schema = "doc_id long, text string"
+    docs = {
+        "empty": lambda: spark.createDataFrame([], schema),
+        "all_null": lambda: spark.createDataFrame(
+            [(i, None) for i in range(50)], schema
+        ),
+        "single": lambda: spark.createDataFrame([(0, "a b c")], schema),
+        "saturated_100": lambda: _saturated_100_tokens(spark),
+    }[corpus]()
+    assert dedup.choose_word_jaccard_strategy(docs) == want
+    assert dedup.choose_word_jaccard_strategy(docs, max_emission=None) == want
+    if corpus in ("empty", "all_null"):
+        assert dedup.word_jaccard_pairs(docs).count() == 0
+
+
+def test_word_sample_is_the_lowest_doc_ids(spark):
+    """The chooser's sample is the sample_docs lowest doc_ids whatever the
+    partition order — empty word sets included, so a short sample still
+    proves the corpus size."""
+    ids = [(i * 37) % 101 for i in range(101)]
+    docs = spark.createDataFrame(
+        [(i, None if i == 2 else f"d{i} common") for i in ids],
+        "doc_id long, text string",
+    ).repartition(7)
+    sets = dedup._word_sample(docs, "text", 5)
+    assert len(sets) == 5
+    assert sorted(w for s in sets for w in s if w != "common") == [
+        "d0", "d1", "d3", "d4",
+    ]
+    assert [] in sets
 
 
 # ---------------------------------------------------------------------------
@@ -688,6 +772,23 @@ def test_routed_entry_construct_job_budget(spark, tables):
         ),
     )
     assert 0 < escalating <= 3, escalating
+
+
+def test_word_jaccard_construct_job_budget(spark, tables):
+    """The word-Jaccard chooser pulls one deterministic sample and folds
+    every stat in Python (the two-cache chooser took 8 jobs, and
+    word_jaccard_pairs(strategy='auto') 15, on this corpus)."""
+    docs = tables["documents"]
+    chooser = _construct_jobs(
+        spark, "word_chooser",
+        lambda: dedup.choose_word_jaccard_strategy(docs),
+    )
+    assert 0 < chooser <= 2, chooser
+    auto = _construct_jobs(
+        spark, "word_pairs_auto",
+        lambda: dedup.word_jaccard_pairs(docs, strategy="auto"),
+    )
+    assert 0 < auto <= 9, auto
 
 
 def test_band_sign_keys_rejects_unpackable_widths(spark):
